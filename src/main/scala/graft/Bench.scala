@@ -290,7 +290,6 @@ object Bench {
     // for identical code; defaulting the driver's invocation to the same
     // methodology keeps the two artifacts comparable.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "noop")
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run — for isolating one
     // query's cost from cross-query JVM interference when triaging a
     // regression. The driver never sets it; full runs stay the contract.
@@ -402,23 +401,13 @@ object Bench {
         // actually completes. Failures time as the NEGATED elapsed time —
         // visibly wrong in any artifact — and are listed in "failed".
         //
-        // Consumption mode (SPARK_GRAFT_BENCH_MODE, default "noop"):
-        // rounds 1–14 consumed with .count(), under which Catalyst
-        // legitimately SKIPS work the count does not need — column
-        // pruning plus left-outer-join elimination (a unique-keyed
-        // aggregate right side preserves cardinality) removed, e.g.,
-        // x_substring_strip's entire window/digest pipeline: its "100×"
-        // count-mode reading was 0.27 s of base scan. The noop sink
-        // (format("noop")) materializes EVERY output column through the
-        // full plan — what a user writing the result would pay — and is
-        // the committed methodology from round 15 on; "count" remains
-        // for bridge comparisons against pre-15 artifacts (BASELINE.md
-        // records one round of both).
+        // Consumed through the noop sink, which materializes EVERY
+        // output column through the full plan — what a user writing the
+        // result would pay. A .count() would let Catalyst skip work it
+        // does not need (column pruning, outer-join elimination).
         val ok =
           try {
-            val df = fn(spark, sfDir)
-            if (mode == "count") df.count()
-            else df.write.format("noop").mode("overwrite").save()
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             true
           }
           catch { case e: Throwable =>
@@ -461,7 +450,7 @@ object Bench {
           ",\"reps\":[" + times.mkString(",") + "]" + probeJson + "}"
       }
       .mkString(
-        s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"reps":$reps,"mode":"$mode","canary":$canary,"canary_io":$canaryIo,"window_suspect":$windowSuspect,"canary_ref":[$canaryRefCpu,$canaryRefIo],"failed":${failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir","queries":{""",
+        s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"reps":$reps,"mode":"noop","canary":$canary,"canary_io":$canaryIo,"window_suspect":$windowSuspect,"canary_ref":[$canaryRefCpu,$canaryRefIo],"failed":${failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir","queries":{""",
         ",",
         "}}")
     // A SCOPED run (SPARK_GRAFT_BENCH_ONLY) writes its detail to
@@ -495,7 +484,7 @@ object Bench {
       if (failed.isEmpty) ""
       else s""","failed":${failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     val line =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"mode":"$mode","canary":${f3(canary)},"canary_io":${f3(canaryIo)},"window_suspect":$windowSuspect,"canary_ref":[${f3(canaryRefCpu)},${f3(canaryRefIo)}],"detail":"$detailFile","queries":$qs$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"mode":"noop","canary":${f3(canary)},"canary_io":${f3(canaryIo)},"window_suspect":$windowSuspect,"canary_ref":[${f3(canaryRefCpu)},${f3(canaryRefIo)}],"detail":"$detailFile","queries":$qs$failedJson,"sf":"$sfDir"}"""
     spark.stop()
     println(line)
     System.out.flush()

@@ -24,7 +24,9 @@ object Sessions {
       // BENCH_R19OPT_A.json) but that full run read ~2× slower with
       // 10-30× task GC — partially confounded by a VM ambient-noise
       // phase the same session later proved can inflate identical code
-      // 4× (R19AbProbe round 4: old == new once the burst passed), but
+      // 4× (round 4 of the same-JVM sink A/B in
+      // src/main/scala/graft/tools/R19AbProbe.scala at git 83574e8:
+      // old == new once the burst passed), but
       // the GC/metaspace direction of a 4096-class pin is real and the
       // compile saving is bounded (~10-20 ms × ~1,800 ≈ well under 10%
       // of a close). Default kept: eviction keeps generated classes

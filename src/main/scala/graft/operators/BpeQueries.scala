@@ -184,36 +184,15 @@ object BpeQueries extends QueryModule {
     * scratch root as the oracle-comparable frame: finalized sequences
     * (tokens U+001F-joined — the j12/a4 scalar rule) joined with each
     * stream's final fill offset and carried-tail doc count, both read
-    * at the FILL dir's snapshot id. Callers append extra columns, then
-    * order and checkpoint. Shared by x_materialize_incremental and
+    * as the sink's own paired fill/tail snapshot (latest on disk; a torn
+    * pair raises). Callers append extra columns, then order and
+    * checkpoint. Shared by x_materialize_incremental and
     * x_training_pipeline — glue fixes land here once. */
-  private[operators] def readMaterializedSink(
+  private[graft] def readMaterializedSink(
       s: SparkSession, root: String): DataFrame = {
-    // prune to ONE fill partition — the latest batch id on disk — not
-    // the O(batches · state) history union the DocumentStreaming
-    // scaladoc forbids for snapshot reads (readStateSnapshot's rule);
-    // no batch partitions means the flat post-compaction bootstrap
-    // layout, which IS one snapshot already
-    val fillP = new org.apache.hadoop.fs.Path(s"$root/fill")
-    val fs = fillP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // the sink's own batch-dir discovery, shared (one copy of the
-    // visibility rule); Long.MaxValue = "latest on disk"
-    val latest: Option[Long] = graft.streaming.DocumentStreaming
-      .latestVisibleBatch(s, s"$root/fill", Long.MaxValue)
-    val (fillSnap, tailSnap) = latest match {
-      case Some(b) =>
-        // the sink's torn-pair guard, mirrored: fill and tail are a
-        // paired write, so a fill partition whose tail partition is
-        // missing marks a crash between the two writes — raise rather
-        // than silently reading n_tail_docs = 0
-        val tp = new org.apache.hadoop.fs.Path(s"$root/tail/batch_id=$b")
-        require(fs.exists(tp),
-          s"readMaterializedSink: fill batch_id=$b has no tail partition")
-        (s.read.parquet(s"$root/fill/batch_id=$b"),
-          s.read.parquet(s"$root/tail/batch_id=$b"))
-      case None =>
-        (s.read.parquet(s"$root/fill"), s.read.parquet(s"$root/tail"))
-    }
+    val Seq(fillSnap, tailSnap) = graft.streaming.BatchState.readSnapshot(
+      s, Long.MaxValue, s"$root/fill" -> Corpus.emptyPackState(s),
+      s"$root/tail" -> Corpus.emptyMaterializeTail(s))
     val finalFill = fillSnap
       .select(col("source"), col("next_end").as("final_end"))
     val tailCnt = tailSnap
@@ -582,7 +561,7 @@ object BpeQueries extends QueryModule {
     // Streaming packing sink (DocumentStreaming.packSink) driven
     // end-to-end, the x_curation_sink treatment: three arrival batches
     // through the REAL foreachBatch closure with batch-keyed parquet
-    // state written and read back per batch (as_of_batch latest-wins),
+    // state written and read back per batch (latest snapshot wins),
     // then packed output + each stream's final fill state hash-gated
     // against the same ONE-fold DuckDB re-derivation — the persistence
     // plumbing, not just the in-memory algebra x_incremental_pack
@@ -598,13 +577,13 @@ object BpeQueries extends QueryModule {
         (0 until 3).foreach { b =>
           sink(counts.filter(pmod(col("doc_id"), lit(3)) === b), b.toLong)
         }
-        val finalState = s.read.parquet(s"$root/state")
-          .groupBy("source")
-          .agg(max_by(col("next_end"), col("as_of_batch")).as("final_end"))
+        val Seq(finalState) = graft.streaming.BatchState.readSnapshot(
+          s, Long.MaxValue, s"$root/state" -> Corpus.emptyPackState(s))
         s.read.parquet(s"$root/packed")
           // null-safe, mirroring the oracle (see packFoldSql): a
           // null-source stream's rows keep their state row
-          .join(finalState.withColumnRenamed("source", "_src"),
+          .join(finalState.select(col("source").as("_src"),
+            col("next_end").as("final_end")),
             col("source") <=> col("_src"))
           .select(col("doc_id"), col("source"), col("n_tokens"),
             col("seq_id"), col("seq_off"), col("overlong"),

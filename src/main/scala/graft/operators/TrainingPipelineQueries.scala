@@ -82,7 +82,8 @@ object TrainingPipelineQueries extends QueryModule {
           curate(corpus.filter(pmod(col("doc_id"), lit(3)) === b), b.toLong)
           // THE chain: this batch's admitted partition — and only it —
           // feeds packing in the same micro-batch cadence
-          val admitted = s.read.parquet(s"$root/cur/admitted/batch_id=$b")
+          val admitted = graft.streaming.BatchState
+            .readBatch(s, s"$root/cur/admitted", b)
           mat(admitted.join(srcDim, Seq("doc_id"))
             .select(col("doc_id"), col("source"),
               Corpus.tokens(col("text")).as("pieces")), b.toLong)

@@ -3,187 +3,41 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Corpus, TextDedup}
+
 /** Structured-Streaming transforms for document (training-data) arrival —
   * the streaming forms of the x_* dedup/analysis family, written against
   * the unified API so the same code runs incremental-batch or
-  * `readStream`.
-  *
-  * ==Delivery guarantee (all foreachBatch sinks here)==
-  * Every state/output write is keyed by the micro-batch id
-  * (`path/batch_id=N`, overwritten in place) and every state READ is
-  * restricted to strictly-earlier batches (`batch_id < N`). So an
-  * at-least-once replay of batch N (crash between the writes and the
-  * streaming checkpoint commit) (a) sees EXACTLY the state the first
-  * attempt saw — its own partial appends are invisible to the
-  * `batch_id < N` load — and recomputes identical decisions, and
-  * (b) OVERWRITES its own earlier partial output instead of appending
-  * beside it. Net: effectively-once on plain parquet, no transactional
-  * table format required; ledger/output readers never see duplicate or
-  * contradictory rows for a doc. (The previous flat-append layout
-  * documented an at-least-once caveat — a replay both saw its own
-  * signatures in the index, flipping its decisions to dup_of_index, and
-  * double-appended ledger rows.)
+  * `readStream`. Every `foreachBatch` sink here persists its state and
+  * output through [[BatchState]], whose scaladoc states the layout and
+  * the effectively-once delivery contract.
   */
 object DocumentStreaming {
 
-  /** Read a batch-keyed state directory: rows written by batches
-    * STRICTLY BEFORE `batchId`, PLUS any flat (non-batch-keyed) files
-    * at the directory root — a BOOTSTRAPPED index (the
-    * `Corpus.substringDigestIndex`-style rebuild the scaladocs
-    * document, or a state dir carried over from the flat-append
-    * layout) is always-visible prior state, never silently dropped.
-    * The listing selects the leaf paths explicitly (no Hive partition
-    * discovery), so flat and batch-keyed files coexist. `empty` only
-    * when the directory is absent or holds no data files — a
-    * transient read failure on existing state FAILS the micro-batch
-    * rather than silently resetting the index and re-admitting
-    * duplicates.
-    *
-    * Restart caveat: batch visibility is `batch_id < batchId`, so
-    * resuming a stream from its checkpoint is seamless, but starting a
-    * FRESH checkpoint over existing batch-keyed state hides batches
-    * >= the restarted ids — compact such state into a flat bootstrap
-    * layout first (read the dir, write it back flat). */
-  private[streaming] def readState(spark: SparkSession, path: String,
-      empty: DataFrame, batchId: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) empty
-    else {
-      val statuses = fs.listStatus(p)
-      val batchDirs = statuses.filter { s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch_id=") &&
-          s.getPath.getName.drop("batch_id=".length).toLongOption
-            .exists(_ < batchId)
-      }
-      val flatFiles = statuses.filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      val paths = (batchDirs ++ flatFiles).map(_.getPath.toString)
-      if (paths.isEmpty) empty
-      else spark.read.schema(empty.schema).parquet(paths: _*)
-    }
-  }
-
-  /** Overwrite this batch's partition of a batch-keyed state/output
-    * directory — the replay-idempotent append. */
-  private[streaming] def writeState(df: DataFrame, path: String,
-      batchId: Long): Unit =
-    df.write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-
-  /** Run one sink invocation and RELEASE its localCheckpoint blocks on
-    * the way out. The sinks (and the incremental operators they call)
-    * `localCheckpoint` bounded per-batch intermediates — the standard
-    * foreachBatch persist-the-batch idiom — but a checkpoint block
-    * lives until the driver GC lets ContextCleaner collect it, so on a
-    * long-running stream (or a bench running hundreds of queries in
-    * one JVM) the blocks accumulate across micro-batches and the
-    * storage/GC pressure lands on UNRELATED work. Everything a batch
-    * checkpoints is consumed by that batch's own writes, so the blocks
-    * are dead at sink exit by construction: unpersist them explicitly
-    * (non-blocking — the removal is async, but it no longer waits on a
-    * full GC cycle). Scoped by RDD-id snapshot, so checkpoints owned by
-    * the CALLER (e.g. frames the query glue holds across batches) are
-    * never touched. */
-  private[streaming] def releasingSinkCheckpoints[T](spark: SparkSession)
-      (body: => T): T = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try body
-    finally spark.sparkContext.getPersistentRDDs.foreach {
-      case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = false)
-    }
-  }
-
-  /** The latest batch id visible to `batchId` in a batch-keyed state
-    * dir, or None when only flat bootstrap files (or nothing) exist.
-    * private[graft]: BpeQueries' sink read-back glue shares THIS
-    * discovery (one copy of the `batch_id=` parse/visibility rule). */
-  private[graft] def latestVisibleBatch(spark: SparkSession,
-      path: String, batchId: Long): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .flatMap(_.getPath.getName match {
-        case n if n.startsWith("batch_id=") =>
-          n.drop("batch_id=".length).toLongOption
-        case _ => None
-      })
-      .filter(_ < batchId)
-      .maxOption
-  }
-
-  /** Read ONE consistent snapshot of a SNAPSHOT-style state dir (each
-    * batch writes the COMPLETE state): the latest visible batch
-    * partition alone, else the flat bootstrap files. Unlike
-    * [[readState]] — which unions all earlier batches and is right for
-    * APPEND-style state like the admission indexes — this reads one
-    * partition per micro-batch, keeping per-batch state IO O(state),
-    * not O(batches · state). */
-  private[streaming] def readStateSnapshot(spark: SparkSession,
-      path: String, empty: DataFrame, batchId: Long): DataFrame =
-    latestVisibleBatch(spark, path, batchId) match {
-      case Some(b) =>
-        spark.read.schema(empty.schema).parquet(s"$path/batch_id=$b")
-      case None => readState(spark, path, empty, 0L) // bootstrap only
-    }
-
-  /** Compact a batch-keyed state directory into the flat BOOTSTRAP
-    * layout [[readState]] treats as always-visible prior state — the
-    * documented prerequisite for restarting a stream with a FRESH
-    * checkpoint over existing state (batch ids restart at 0, which
-    * would hide every batch-keyed row). `empty` supplies the state
-    * schema (the same limit(0) frame the sinks build). Run OFFLINE
-    * (no active stream on this state): the rewrite is
-    * write-tmp → delete → rename, not atomic under concurrent
-    * writers; a crash between delete and rename leaves the compacted
-    * copy at `path + ".compact.tmp"` to recover by hand. Compact the
+  /** Compact a batch-keyed APPEND state directory into the flat
+    * bootstrap layout — the prerequisite for restarting a stream with a
+    * FRESH checkpoint over existing state (see [[BatchState]]). `empty`
+    * supplies the state schema (the same limit(0) frame the sinks
+    * build). Run OFFLINE (no active stream on this state). Compact the
     * OUTPUT dirs (admitted/, ledger/, screened/) the same way when
     * restarting fresh — the restarted batch ids overwrite their
-    * `batch_id=N` partitions, so un-compacted old output at those ids
-    * would be replaced. */
+    * partitions, so un-compacted old output at those ids would be
+    * replaced. */
   def compactState(spark: SparkSession, path: String,
       empty: DataFrame): Unit =
-    compactWith(spark, path, empty, identity)
+    BatchState.compactAppend(spark, path, empty)
 
-  /** [[compactState]] for [[packSink]]'s (groupCol, next_end,
-    * as_of_batch) state: folds the dir to ONE row per stream — each
-    * stream's newest next_end — re-based to `as_of_batch = -1`, the
-    * BOOTSTRAP marker every restarted batch id (>= 0) outranks in the
-    * sink's per-stream max_by read. The generic [[compactState]] must
-    * NOT be used on pack state before a fresh-checkpoint restart: it
-    * preserves the old as_of_batch values, which the restarted ids
-    * (0, 1, …) would LOSE to, resuming every stream from a stale
-    * pre-restart offset until the new ids grow past the old. Same
-    * offline/non-atomic caveats as [[compactState]]. */
+  /** Compaction for [[packSink]]'s (groupCol, next_end, as_of_batch)
+    * snapshot state: ONE row per stream — the latest snapshot — re-based
+    * to the `as_of_batch = -1` bootstrap marker. The generic
+    * [[compactState]] must NOT be used on pack state: it would keep
+    * every batch's row per stream and their old stamps, which the
+    * restarted ids (0, 1, …) would LOSE to. Offline, like every
+    * compaction. */
   def compactPackState(spark: SparkSession, path: String,
-      groupCol: String = "source"): Unit = {
-    val empty = graft.operators.Corpus.emptyPackState(spark, groupCol)
-      .withColumn("as_of_batch", lit(0L))
-    compactWith(spark, path, empty, all => all
-      .groupBy(col(groupCol))
-      .agg(max_by(col("next_end"), col("as_of_batch")).as("next_end"))
-      .select(col(groupCol), col("next_end"),
-        lit(-1L).as("as_of_batch")))
-  }
-
-  private def compactWith(spark: SparkSession, path: String,
-      empty: DataFrame, fold: DataFrame => DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val all = fold(readState(spark, path, empty, Long.MaxValue))
-      val tmp = new org.apache.hadoop.fs.Path(path + ".compact.tmp")
-      all.write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(
-          s"compactState: rename $tmp -> $p failed; state preserved at $tmp")
-    }
-  }
+      groupCol: String = "source"): Unit =
+    BatchState.compactSnapshot(spark,
+      path -> Corpus.emptyPackState(spark, groupCol))
 
   /** Streaming exact dedup on arrival (the streaming form of D1 /
     * x_dedup_exact): the first arrival of each normalized content hash
@@ -207,35 +61,30 @@ object DocumentStreaming {
     * [[graft.operators.TextDedup.incrementalMinHashDedup]] against the
     * signature index accumulated from every earlier batch. Admitted
     * docs land under `admittedPath`, their signatures under
-    * `indexPath` (both batch-keyed — see the object scaladoc's
-    * effectively-once contract) — the per-batch corpus-side cost is
-    * the narrow index scan (numHashes longs per admitted doc), never
-    * the admitted text, which is what keeps an unbounded intake
-    * viable: state grows with ADMITTED docs (post-dedup), and none of
-    * it lives in the state store.
+    * `indexPath` (both batch-keyed, [[BatchState]]) — the per-batch
+    * corpus-side cost is the narrow index scan (numHashes longs per
+    * admitted doc), never the admitted text, which is what keeps an
+    * unbounded intake viable: state grows with ADMITTED docs
+    * (post-dedup), and none of it lives in the state store.
     *
     * Usage: `docs.writeStream.foreachBatch(
     *   DocumentStreaming.admissionSink(ix, out, "text", "doc_id"))`. */
   def admissionSink(indexPath: String, admittedPath: String,
       textCol: String, idCol: String, n: Int = 2, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.5)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    releasingSinkCheckpoints(spark) {
-      val index = readState(spark, indexPath, graft.operators.TextDedup
-        .minHashSignatures(batch.limit(0), textCol, idCol, n, numHashes),
-        batchId)
-      // decisions come back localCheckpoint'ed by the library (both
-      // returned frames share the one materialized candidate join — the
-      // two write actions below cannot re-run it or diverge on replay)
-      val (decisions, admittedSig) = graft.operators.TextDedup
-        .incrementalMinHashDedup(batch, index, textCol, idCol,
-          n, numHashes, bands, threshold)
-      val kept = decisions.filter(col("keep"))
-        .select(col("id").as(idCol))
-      writeState(batch.join(kept, Seq(idCol)), admittedPath, batchId)
-      writeState(admittedSig, indexPath, batchId)
-    }
+      : (DataFrame, Long) => Unit = BatchState.sink {
+        (spark, batch, batchId) =>
+    val index = BatchState.readAppend(spark, indexPath, TextDedup
+      .minHashSignatures(batch.limit(0), textCol, idCol, n, numHashes),
+      batchId)
+    // decisions come back localCheckpoint'ed by the library (both
+    // returned frames share the one materialized candidate join — the
+    // two write actions below cannot re-run it or diverge on replay)
+    val (decisions, admittedSig) = TextDedup.incrementalMinHashDedup(
+      batch, index, textCol, idCol, n, numHashes, bands, threshold)
+    val kept = decisions.filter(col("keep")).select(col("id").as(idCol))
+    BatchState.write(batch.join(kept, Seq(idCol)), admittedPath, batchId)
+    BatchState.write(admittedSig, indexPath, batchId)
   }
 
   /** Streaming cross-document substring-dedup admission — the
@@ -247,30 +96,27 @@ object DocumentStreaming {
     * occurrences preserved where they were first admitted) lands under
     * `strippedPath` and the batch's surviving fresh digests under
     * `indexPath` (16 bytes per distinct window — the only corpus-side
-    * state; admitted text is never re-read). Batch-keyed writes per
-    * the object scaladoc's effectively-once contract.
+    * state; admitted text is never re-read). Batch-keyed writes
+    * ([[BatchState]]).
     *
     * Usage: `docs.writeStream.foreachBatch(
     *   DocumentStreaming.substringStripSink(ix, out, "text",
     *   "doc_id"))`. */
   def substringStripSink(indexPath: String, strippedPath: String,
       textCol: String, idCol: String, windowTokens: Int = 20)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    releasingSinkCheckpoints(spark) {
-      val index = readState(spark, indexPath, graft.operators.Corpus
-        .substringDigestIndex(batch.limit(0), textCol, idCol, windowTokens),
-        batchId)
-      val (strippedRaw, freshRaw) = graft.operators.Corpus
-        .incrementalSubstringStrip(batch, index, textCol, idCol,
-          windowTokens)
-      // two write actions below; checkpoint so the digest classification
-      // joins against the accumulated index run once, not per consumer
-      val stripped = strippedRaw.localCheckpoint()
-      val fresh = freshRaw.localCheckpoint()
-      writeState(stripped, strippedPath, batchId)
-      writeState(fresh, indexPath, batchId)
-    }
+      : (DataFrame, Long) => Unit = BatchState.sink {
+        (spark, batch, batchId) =>
+    val index = BatchState.readAppend(spark, indexPath, Corpus
+      .substringDigestIndex(batch.limit(0), textCol, idCol, windowTokens),
+      batchId)
+    val (strippedRaw, freshRaw) = Corpus.incrementalSubstringStrip(
+      batch, index, textCol, idCol, windowTokens)
+    // two write actions below; checkpoint so the digest classification
+    // joins against the accumulated index run once, not per consumer
+    val stripped = strippedRaw.localCheckpoint()
+    val fresh = freshRaw.localCheckpoint()
+    BatchState.write(stripped, strippedPath, batchId)
+    BatchState.write(fresh, indexPath, batchId)
   }
 
   /** Register an eval suite into the persisted benchmark-vocabulary
@@ -281,16 +127,12 @@ object DocumentStreaming {
     * by release, not by stream), so the vocab dir stays flat-append:
     * re-registering the same suite appends nothing (the anti-join),
     * which is the idempotence this out-of-band path needs. */
-  def registerSuite(spark: org.apache.spark.sql.SparkSession,
-      vocabPath: String, suite: DataFrame, textCol: String,
-      idCol: String, n: Int = 3): Unit = {
-    val emptyVocab = graft.operators.Corpus
-      .benchmarkVocab(suite.limit(0), textCol, idCol, n)
-    val existing =
-      try spark.read.schema(emptyVocab.schema).parquet(vocabPath)
-      catch { case _: org.apache.spark.sql.AnalysisException => emptyVocab }
-    graft.operators.Corpus
-      .extendBenchmarkVocab(existing, suite, textCol, idCol, n)
+  def registerSuite(spark: SparkSession, vocabPath: String,
+      suite: DataFrame, textCol: String, idCol: String, n: Int = 3)
+      : Unit = {
+    val existing = BatchState.readFlat(spark, vocabPath,
+      Corpus.benchmarkVocab(suite.limit(0), textCol, idCol, n))
+    Corpus.extendBenchmarkVocab(existing, suite, textCol, idCol, n)
       .write.mode("append").parquet(vocabPath)
   }
 
@@ -313,16 +155,13 @@ object DocumentStreaming {
     *   "doc_id"))`. */
   def contaminationSink(vocabPath: String, screenedPath: String,
       textCol: String, idCol: String, n: Int = 3, flagAt: Double = 0.8)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    val emptyVocab = graft.operators.Corpus
-      .benchmarkVocab(batch.limit(0), textCol, idCol, n)
-    val vocab =
-      try spark.read.schema(emptyVocab.schema).parquet(vocabPath)
-      catch { case _: org.apache.spark.sql.AnalysisException => emptyVocab }
-    val hits = graft.operators.Corpus.incrementalContamination(
+      : (DataFrame, Long) => Unit = BatchState.sink {
+        (spark, batch, batchId) =>
+    val vocab = BatchState.readFlat(spark, vocabPath,
+      Corpus.benchmarkVocab(batch.limit(0), textCol, idCol, n))
+    val hits = Corpus.incrementalContamination(
       batch, vocab, textCol, idCol, n, flagAt)
-    writeState(batch.select(col(idCol))
+    BatchState.write(batch.select(col(idCol))
       .join(hits, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_hit"), lit(0L)).as("n_hit"),
@@ -371,8 +210,8 @@ object DocumentStreaming {
     * its index; admitted text is never re-read by any stage. Admission
     * dedup signatures are computed on ARRIVAL text (pre-strip), the
     * same text the batch pipeline pairs on. Replays recompute
-    * identical decisions and overwrite their own attempt (object
-    * scaladoc).
+    * identical decisions and overwrite their own attempt
+    * ([[BatchState]]).
     *
     * Usage: `docs.writeStream.foreachBatch(
     *   DocumentStreaming.curationSink(root, "text", "doc_id"))`. */
@@ -380,11 +219,8 @@ object DocumentStreaming {
       n: Int = 2, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5, windowTokens: Int = 20,
       shingleN: Int = 3, flagAt: Double = 0.8)
-      : (DataFrame, Long) => Unit = { (batch0, batchId) =>
-    val spark = batch0.sparkSession
-    import graft.operators.{Corpus, TextDedup}
-    releasingSinkCheckpoints(spark) {
-
+      : (DataFrame, Long) => Unit = BatchState.sink {
+        (spark, batch0, batchId) =>
     // ONE materialization of the arrival batch, quality flag included
     // (qualityFlags is map-only). Every stage below consumes the batch
     // — signatures, strip base, ledger — and each previously re-planned
@@ -405,8 +241,9 @@ object DocumentStreaming {
     val qualified = arrival.filter(col("passes"))
       .select(col(idCol), col(textCol))
 
-    val sigIndex = readState(spark, s"$root/minhash_index", TextDedup
-      .minHashSignatures(arrival.limit(0), textCol, idCol, n, numHashes),
+    val sigIndex = BatchState.readAppend(spark, s"$root/minhash_index",
+      TextDedup.minHashSignatures(arrival.limit(0), textCol, idCol, n,
+        numHashes),
       batchId)
     // decisions come back checkpointed; keptSig derives from that
     // checkpoint plus the checkpointed signatures (no second index join)
@@ -416,19 +253,16 @@ object DocumentStreaming {
       decisions.filter(col("keep")).select(col("id").as(idCol)),
       Seq(idCol))
 
-    val subIndex = readState(spark, s"$root/substring_index", Corpus
-      .substringDigestIndex(arrival.limit(0), textCol, idCol, windowTokens),
+    val subIndex = BatchState.readAppend(spark, s"$root/substring_index",
+      Corpus.substringDigestIndex(arrival.limit(0), textCol, idCol,
+        windowTokens),
       batchId)
     val (strippedRaw, _) = Corpus.incrementalSubstringStrip(
       keptDocs, subIndex, textCol, idCol, windowTokens)
     val stripped = strippedRaw.localCheckpoint()
 
-    val vocab = {
-      val empty =
-        Corpus.benchmarkVocab(arrival.limit(0), textCol, idCol, shingleN)
-      try spark.read.schema(empty.schema).parquet(s"$root/vocab")
-      catch { case _: org.apache.spark.sql.AnalysisException => empty }
-    }
+    val vocab = BatchState.readFlat(spark, s"$root/vocab",
+      Corpus.benchmarkVocab(arrival.limit(0), textCol, idCol, shingleN))
     val contam = Corpus.incrementalContamination(
       stripped.withColumnRenamed("text", textCol), vocab,
       textCol, idCol, shingleN, flagAt)
@@ -469,8 +303,8 @@ object DocumentStreaming {
       .localCheckpoint()
 
     val admittedIds = ledger.filter(col("admitted")).select(col(idCol))
-    writeState(ledger.drop("_stripped"), s"$root/ledger", batchId)
-    writeState(ledger.filter(col("admitted"))
+    BatchState.write(ledger.drop("_stripped"), s"$root/ledger", batchId)
+    BatchState.write(ledger.filter(col("admitted"))
       .select(col(idCol), col("_stripped").as(textCol)),
       s"$root/admitted", batchId)
     // index updates AFTER the decisions, BOTH narrowed to the admitted
@@ -481,16 +315,15 @@ object DocumentStreaming {
     // written here: it would make content from never-admitted docs
     // permanently unadmittable (the standalone substringStripSink keeps
     // it because there every stripped doc IS admitted).
-    writeState(keptSig.join(
+    BatchState.write(keptSig.join(
       admittedIds.withColumnRenamed(idCol, "id"), Seq("id")),
       s"$root/minhash_index", batchId)
-    writeState(graft.operators.Corpus.substringDigestIndex(
+    BatchState.write(Corpus.substringDigestIndex(
         ledger.filter(col("admitted"))
           .select(col(idCol), col("_stripped").as(textCol)),
         textCol, idCol, windowTokens)
       .join(subIndex, Seq("h1", "h2"), "left_anti"),
       s"$root/substring_index", batchId)
-    }
   }
 
   /** Streaming tokenizer-aware sequence packing — the [[admissionSink]]
@@ -500,9 +333,9 @@ object DocumentStreaming {
     * tokenizer-agnostic) fills fixed-`ctxLen` training sequences
     * greedily against the per-stream fill state accumulated from every
     * earlier batch. Packed rows land under `packedPath`, the refreshed
-    * state under `statePath` (both batch-keyed — effectively-once per
-    * the object scaladoc); sequences continue monotonically per stream
-    * across batches, byte-identical to one batch
+    * state under `statePath` (both batch-keyed, [[BatchState]]);
+    * sequences continue monotonically per stream across batches,
+    * byte-identical to one batch
     * [[graft.operators.Corpus.packTokenized]] run over the concatenated
     * arrival order (the x_pack_sink hash gate). Packed output is never
     * re-read or re-numbered; per-batch state cost is O(streams), not
@@ -510,42 +343,32 @@ object DocumentStreaming {
     *
     * [[graft.operators.Corpus.incrementalPackTokenized]] returns
     * carried-forward streams too, so every batch's state partition is
-    * COMPLETE — reads go through [[readStateSnapshot]] (the latest
-    * visible partition ALONE, O(state) per batch, never the
-    * O(batches · state) union), and a replay of batch N sees exactly
-    * the partition N-1 wrote — identical packing, overwritten in
-    * place. Restarting with a FRESH checkpoint requires
-    * [[compactPackState]] (NOT the generic [[compactState]]): the
-    * snapshot read consults the flat bootstrap only when no batch
-    * partition is visible, and the generic compaction would flatten
-    * ALL batches' rows — duplicate (stream, next_end) rows per stream,
-    * which the packer's tag-sort would order nondeterministically.
-    * compactPackState folds to each stream's newest row (re-based to
-    * `as_of_batch = -1` as the bootstrap provenance marker); a
-    * hand-made bootstrap must likewise hold ONE row per stream with
-    * the (groupCol, next_end, as_of_batch) schema.
+    * COMPLETE SNAPSHOT state ([[BatchState.readSnapshot]]), and a replay
+    * of batch N sees exactly the partition N-1 wrote — identical
+    * packing, overwritten in place. Restarting with a FRESH checkpoint
+    * requires [[compactPackState]] (NOT the generic [[compactState]]:
+    * the snapshot read consults the flat bootstrap only when no batch
+    * partition is visible, and the generic compaction would flatten ALL
+    * batches' rows — duplicate (stream, next_end) rows per stream,
+    * which the packer's tag-sort would order nondeterministically). A
+    * hand-made bootstrap must likewise hold ONE row per stream with the
+    * (groupCol, next_end, as_of_batch) schema.
     *
     * Usage: `encoded.writeStream.foreachBatch(
     *   DocumentStreaming.packSink(st, out, "doc_id", "source",
     *   "bpe_tokens", ctxLen = 2048))`. */
   def packSink(statePath: String, packedPath: String, idCol: String,
       groupCol: String, nTokCol: String, ctxLen: Int, eosTokens: Int = 1)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    releasingSinkCheckpoints(spark) {
-      val empty = graft.operators.Corpus.emptyPackState(spark, groupCol)
-        .withColumn("as_of_batch", lit(0L))
-      val latest = readStateSnapshot(spark, statePath, empty, batchId)
-        .drop("as_of_batch")
-      // both returned frames share the operator's one checkpointed scan —
-      // the two writes below cannot re-run it or diverge on replay
-      val (packed, newState) = graft.operators.Corpus
-        .incrementalPackTokenized(batch, latest, idCol, groupCol, nTokCol,
-          ctxLen, eosTokens)
-      writeState(packed, packedPath, batchId)
-      writeState(newState.withColumn("as_of_batch", lit(batchId)),
-        statePath, batchId)
-    }
+      : (DataFrame, Long) => Unit = BatchState.sink {
+        (spark, batch, batchId) =>
+    val Seq(latest) = BatchState.readSnapshot(spark, batchId,
+      statePath -> Corpus.emptyPackState(spark, groupCol))
+    // both returned frames share the operator's one checkpointed scan —
+    // the two writes below cannot re-run it or diverge on replay
+    val (packed, newState) = Corpus.incrementalPackTokenized(batch, latest,
+      idCol, groupCol, nTokCol, ctxLen, eosTokens)
+    BatchState.write(packed, packedPath, batchId)
+    BatchState.writeSnapshot(newState, statePath, batchId)
   }
 
   /** Streaming sequence materialization — [[packSink]]'s last-mile
@@ -556,20 +379,15 @@ object DocumentStreaming {
     * a FINALIZED training row under `outPath`; the still-filling
     * sequence's docs (payloads included, < ctxLen tokens per stream)
     * carry in `tailPath` until a later batch completes them. All three
-    * writes are batch-keyed (effectively-once per the object
-    * scaladoc); emitted sequences are never re-read or re-written.
+    * writes are batch-keyed ([[BatchState]]); emitted sequences are
+    * never re-read or re-written.
     *
-    * State reads take one consistent SNAPSHOT: every batch writes the
-    * COMPLETE fill and tail states, the FILL dir's latest visible
-    * partition names the snapshot, and the tail is read at exactly
-    * that partition (the tail dir's own latest would be wrong — a
-    * batch whose tail emptied still writes its zero-row partition, but
-    * after a crash between the two writes an older batch's stale tail
-    * must not pair with a newer fill; a missing tail partition at the
-    * fill's snapshot id therefore raises). Reads are
-    * [[readStateSnapshot]]-style — one partition per batch, never the
-    * O(batches · state) history union. Fresh-checkpoint restarts go
-    * through [[compactMaterializeState]].
+    * Every batch writes the COMPLETE fill and tail states, read back as
+    * ONE paired snapshot: the FILL dir's latest visible partition names
+    * it and the tail is read at exactly that id, so a torn pair (a crash
+    * between the two writes) raises instead of pairing a stale tail
+    * with a newer fill ([[BatchState.readSnapshot]]). Fresh-checkpoint
+    * restarts go through [[compactMaterializeState]].
     *
     * Usage: `encoded.writeStream.foreachBatch(
     *   DocumentStreaming.materializeSink(fill, tail, out, "doc_id",
@@ -577,88 +395,35 @@ object DocumentStreaming {
   def materializeSink(fillPath: String, tailPath: String,
       outPath: String, idCol: String, groupCol: String, tokCol: String,
       ctxLen: Int, eos: String = "[EOS]", pad: String = "[PAD]")
-      : (DataFrame, Long) => Unit = { (batch0, batchId) =>
-    val spark = batch0.sparkSession
-    releasingSinkCheckpoints(spark) {
+      : (DataFrame, Long) => Unit = BatchState.sink {
+        (spark, batch0, batchId) =>
     // incrementalMaterialize consumes the batch TWICE (token counts for
     // the fill, then the payload join) — materialize the bounded
     // micro-batch once so the caller's source subtree (often a read +
     // join + tokenize) is neither re-planned nor re-executed per
     // consumer (the foreachBatch persist-the-batch idiom)
     val batch = batch0.localCheckpoint()
-    val emptyFill = graft.operators.Corpus.emptyPackState(spark, groupCol)
-      .withColumn("as_of_batch", lit(0L))
-    val emptyTail = graft.operators.Corpus
-      .emptyMaterializeTail(spark, groupCol)
-      .withColumn("as_of_batch", lit(0L))
-    // the FILL dir's latest visible partition names the snapshot; the
-    // tail is read at exactly that partition (see scaladoc)
-    val (fillSt, tailSt) =
-      latestVisibleBatch(spark, fillPath, batchId) match {
-        case Some(b) =>
-          val tp = new org.apache.hadoop.fs.Path(s"$tailPath/batch_id=$b")
-          if (!tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .exists(tp))
-            throw new java.io.IOException(
-              s"materializeSink: fill state batch_id=$b has no tail " +
-                "partition — an interrupted batch must be healed by the " +
-                "stream's own replay, not read as a snapshot")
-          (spark.read.schema(emptyFill.schema)
-             .parquet(s"$fillPath/batch_id=$b"),
-           spark.read.schema(emptyTail.schema).parquet(tp.toString))
-        case None =>
-          (readState(spark, fillPath, emptyFill, 0L),   // flat bootstrap
-           readState(spark, tailPath, emptyTail, 0L))
-      }
-    val (complete, newFill, newTail) = graft.operators.Corpus
-      .incrementalMaterialize(batch, fillSt.drop("as_of_batch"),
-        tailSt.drop("as_of_batch"),
-        idCol, groupCol, tokCol, ctxLen, eos, pad)
-    writeState(complete, outPath, batchId)
-    writeState(newFill.withColumn("as_of_batch", lit(batchId)),
-      fillPath, batchId)
-    writeState(newTail.withColumn("as_of_batch", lit(batchId)),
-      tailPath, batchId)
-    }
+    val Seq(fillSt, tailSt) = BatchState.readSnapshot(spark, batchId,
+      fillPath -> Corpus.emptyPackState(spark, groupCol),
+      tailPath -> Corpus.emptyMaterializeTail(spark, groupCol))
+    val (complete, newFill, newTail) = Corpus.incrementalMaterialize(
+      batch, fillSt, tailSt, idCol, groupCol, tokCol, ctxLen, eos, pad)
+    BatchState.write(complete, outPath, batchId)
+    BatchState.writeSnapshot(newFill, fillPath, batchId)
+    BatchState.writeSnapshot(newTail, tailPath, batchId)
   }
 
-  /** [[compactState]] for [[materializeSink]]'s state PAIR: re-bases
-    * the latest consistent snapshot to the -1 bootstrap marker and
-    * drops older batches' rows, so a fresh-checkpoint restart resumes
-    * from exactly that snapshot. The FILL dir's max as_of_batch names
-    * the snapshot for BOTH dirs — the tail dir's own max is not
-    * authoritative, because a batch whose tail emptied writes zero
-    * tail rows and an older batch's stale tail would masquerade as
-    * latest. Run offline after a CLEAN stop, like every compaction
-    * here (a crash between a batch's fill and tail writes is healed by
-    * the stream's own replay, not by compaction). */
+  /** Compaction for [[materializeSink]]'s state PAIR: the latest
+    * consistent snapshot, re-based to the -1 bootstrap marker, so a
+    * fresh-checkpoint restart resumes from exactly that snapshot. Run
+    * offline after a CLEAN stop: a torn pair raises (resume the stream
+    * once to heal it) rather than flattening the tail to EMPTY and
+    * deleting the carried partial-sequence payloads. */
   def compactMaterializeState(spark: SparkSession, fillPath: String,
       tailPath: String, groupCol: String = "source"): Unit =
-    latestVisibleBatch(spark, fillPath, Long.MaxValue) match {
-      case None => () // flat bootstrap (or nothing): already compact
-      case Some(b) =>
-        // same torn-pair guard as the read path: a fill partition with
-        // no tail partition is an interrupted batch — compacting it
-        // would silently flatten the tail to EMPTY and delete the
-        // carried partial-sequence payloads (a zero-ROW tail partition
-        // is legitimate; a missing DIRECTORY is not)
-        val tp = new org.apache.hadoop.fs.Path(s"$tailPath/batch_id=$b")
-        if (!tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(tp))
-          throw new java.io.IOException(
-            s"compactMaterializeState: fill batch_id=$b has no tail " +
-              "partition — resume the stream once to heal the torn " +
-              "pair before compacting")
-        def rebase(df: DataFrame): DataFrame =
-          df.filter(col("as_of_batch") === b)
-            .withColumn("as_of_batch", lit(-1L))
-        compactWith(spark, fillPath, graft.operators.Corpus
-          .emptyPackState(spark, groupCol)
-          .withColumn("as_of_batch", lit(0L)), rebase)
-        compactWith(spark, tailPath, graft.operators.Corpus
-          .emptyMaterializeTail(spark, groupCol)
-          .withColumn("as_of_batch", lit(0L)), rebase)
-    }
+    BatchState.compactSnapshot(spark,
+      fillPath -> Corpus.emptyPackState(spark, groupCol),
+      tailPath -> Corpus.emptyMaterializeTail(spark, groupCol))
 
   /** Per-window language/quality profile of the arrival stream (the
     * monitoring mart a training-data intake runs): windowed counts and

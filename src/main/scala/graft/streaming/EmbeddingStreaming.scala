@@ -10,13 +10,8 @@ import graft.operators.Similarity
   * [[Similarity.incrementalSemanticDedup]] against the persisted
   * cluster-prefix anchor index (≤ k·maxPriors rows — the admitted
   * corpus's embeddings are never re-read), kept rows append to the
-  * corpus store and budget-fitting anchors append to the index.
-  *
-  * Delivery matches the minhash sink: every write is batch-keyed
-  * (`path/batch_id=N`, overwritten) and the index load reads strictly
-  * earlier batches only — a replay recomputes identical decisions and
-  * overwrites its own attempt (effectively-once on plain parquet; see
-  * [[DocumentStreaming]]'s object scaladoc for the full argument).
+  * corpus store and budget-fitting anchors append to the index, both
+  * batch-keyed APPEND state ([[BatchState]]).
   */
 object EmbeddingStreaming {
 
@@ -27,34 +22,25 @@ object EmbeddingStreaming {
   def admissionSink(indexPath: String, admittedPath: String,
       centroids: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxPriors: Int = 20)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
+      : (DataFrame, Long) => Unit = BatchState.sink {
+        (spark, batch, batchId) =>
     // centroid_id's type follows the caller's centroids frame — a
     // hardcoded LongType would wedge the stream on the second batch if
     // the quantizer used int ids (parquet written int32, read BIGINT)
     val cidType = centroids.schema("centroid_id").dataType
-    val emptyIndex = batch.limit(0)
+    val index = BatchState.readAppend(spark, indexPath, batch.limit(0)
       .select(col(idCol), col(vecCol),
-        lit(null).cast(cidType).as("centroid_id"))
-    // shared batch-keyed state contract (DocumentStreaming.readState:
-    // flat bootstrap rows always-visible, earlier batches only, loud
-    // failure on unreadable existing state); checkpoint blocks release
-    // at sink exit like every sink here (see
-    // DocumentStreaming.releasingBatchCheckpoints)
-    DocumentStreaming.releasingSinkCheckpoints(spark) {
-      val index = DocumentStreaming.readState(spark, indexPath,
-        emptyIndex, batchId)
-      val (decisionsRaw, anchorsRaw) = Similarity.incrementalSemanticDedup(
-        batch, index, centroids, idCol, vecCol, threshold, maxPriors)
-      // two write actions consume the admission below; checkpoint so the
-      // decision join doesn't re-run per write (and can't diverge on a
-      // lineage replay)
-      val decisions = decisionsRaw.localCheckpoint()
-      val anchors = anchorsRaw.localCheckpoint()
-      val kept = decisions.filter(col("keep")).select(col(idCol))
-      DocumentStreaming.writeState(batch.join(kept, Seq(idCol)),
-        admittedPath, batchId)
-      DocumentStreaming.writeState(anchors, indexPath, batchId)
-    }
+        lit(null).cast(cidType).as("centroid_id")),
+      batchId)
+    val (decisionsRaw, anchorsRaw) = Similarity.incrementalSemanticDedup(
+      batch, index, centroids, idCol, vecCol, threshold, maxPriors)
+    // two write actions consume the admission below; checkpoint so the
+    // decision join doesn't re-run per write (and can't diverge on a
+    // lineage replay)
+    val decisions = decisionsRaw.localCheckpoint()
+    val anchors = anchorsRaw.localCheckpoint()
+    val kept = decisions.filter(col("keep")).select(col(idCol))
+    BatchState.write(batch.join(kept, Seq(idCol)), admittedPath, batchId)
+    BatchState.write(anchors, indexPath, batchId)
   }
 }

@@ -196,6 +196,7 @@ class CapturedApiSpec extends AnyFunSuite with SparkTestSession {
 
   /** One parsed model dump: model name → rows of (pk, fields). */
   private def loadDump(name: String): Map[String, Seq[(Long, Map[String, Any])]] = {
+    assume(RefCapture.available, "reference test_data checkout not present")
     val node = mapper.readTree(RefCapture.text(s"api_fixtures/$name.json"))
     node.elements().asScala.toSeq.map { e =>
       val fields = e.get("fields")

@@ -639,6 +639,31 @@ class DocumentStreamingSpec extends AnyFunSuite with SparkTestSession {
       .toSeq == Seq(("s1#3", 0L)))
   }
 
+  test("a torn materialize state pair (tail partition missing after a " +
+      "crash between the paired writes) raises in the next sink batch, " +
+      "compactMaterializeState and readMaterializedSink") {
+    val sp = spark
+    import sp.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val root = java.nio.file.Files.createTempDirectory("matorn").toString
+    val (fill, tail) = (s"$root/fill", s"$root/tail")
+    val f = DocumentStreaming.materializeSink(fill, tail, s"$root/out",
+      "doc_id", "source", "pieces", ctxLen = 10)
+    def toksDF(id: String) = Seq(id -> Seq("t1", "t2", "t3"))
+      .toDF("doc_id", "pieces")
+      .select(col("doc_id"), lit("s1").as("source"), col("pieces"))
+    f(toksDF("a1"), 0L)
+    f(toksDF("a2"), 1L)
+    graft.core.Scratch.deleteRec(s"$tail/batch_id=1")
+    intercept[java.io.IOException](f(toksDF("a3"), 2L))
+    intercept[java.io.IOException](
+      DocumentStreaming.compactMaterializeState(sp, fill, tail))
+    intercept[java.io.IOException](
+      graft.operators.BpeQueries.readMaterializedSink(sp, root))
+    // the refused compaction left the fill partition in place
+    assert(new java.io.File(s"$fill/batch_id=1").isDirectory)
+  }
+
   test("packSink under the real runtime: a durable file-source stream " +
       "stopped and RESTARTED on the same checkpoint resumes batch ids " +
       "and fill state; a fresh checkpoint resumes from compactPackState's " +
