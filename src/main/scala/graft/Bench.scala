@@ -46,9 +46,10 @@ import org.apache.spark.sql.SparkSession
   *     query itself did more work in-suite (spill onset) or the same
   *     work slower (GC share), vs the wall clock growing around it
   *     (driver/scheduling).
-  *   - codegen_n (CodegenMetrics compilation count delta): whole-stage
-  *     codegen cache (100 plans) eviction — a full suite cycling >100
-  *     plans recompiles what a scoped run hits warm.
+  *   - codegen_n (CodegenMetrics compilation count delta): generated-
+  *     class cache misses (512 slots, two per whole-stage class; see
+  *     Sessions.configure) — a full suite cycling more than that
+  *     recompiles what a scoped run hits warm.
   * All public/DeveloperApi surfaces; probe off (the default) changes
   * nothing about the artifact shape or the measured loop. */
 /** Local shuffle-file debris accounting + the pre-rep DRAIN barrier.

@@ -16,21 +16,25 @@ object Sessions {
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.config("spark.sql.extensions", "graft.expr.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Whole-stage-codegen class cache: MEASURED, then left at the
-      // default 100. The r19 probe counted ~1,800 janino compilations
-      // per bench close (identical sources re-compiled across
-      // micro-batches/reps), so a 4096-entry cache was tried: it did
-      // eliminate the recompiles (codegen_n → 0 in the warm rep,
-      // BENCH_R19OPT_A.json) but that full run read ~2× slower with
-      // 10-30× task GC — partially confounded by a VM ambient-noise
-      // phase the same session later proved can inflate identical code
-      // 4× (round 4 of the same-JVM sink A/B in
-      // src/main/scala/graft/tools/R19AbProbe.scala at git 83574e8:
-      // old == new once the burst passed), but
-      // the GC/metaspace direction of a 4096-class pin is real and the
-      // compile saving is bounded (~10-20 ms × ~1,800 ≈ well under 10%
-      // of a close). Default kept: eviction keeps generated classes
-      // collectable, and the risk/reward is upside-down.
+      // Generated-class cache, sized so a warm micro-batch or a repeated
+      // query compiles nothing. CodeGenerator.compile caches on
+      // (context classloader, source), so every whole-stage class takes
+      // two slots: the driver's fallback-check compile and the task
+      // thread's. One curationSink batch touches ~149 slots; at the
+      // default 100 entries the LRU saw the same cycle every batch and
+      // missed on every lookup, though the sources repeat byte for byte
+      // (~148 compiles, 1.2-1.8 s of a ~4 s batch). With no eviction, a
+      // whole perfbench JVM touches 187 slots on curation_stream and 331
+      // on purl_lookup (ETL + export + serve): 512 covers the largest
+      // with half again to spare, and evicted classes stay collectable.
+      // The price is heap held by cached classes: curation_stream ends
+      // ~6 MB (5%) fuller, while its task GC time fell.
+      .config("spark.sql.codegen.cache.maxEntries", "512")
+      // AQE re-numbers stages between batches, and the stage id is in
+      // the class name (GeneratedIteratorForCodegenStageN), so an
+      // identical stage read as a new source. Without it the id is only
+      // in a comment, which the cache key ignores.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.shuffle.partitions", cpus)
