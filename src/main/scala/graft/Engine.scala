@@ -41,7 +41,14 @@ object Engine {
       vulnerabilityMembership: DataFrame,
       v1PackageVulnCounts: DataFrame,
       codeFixes: DataFrame,
-      packageChangeLog: DataFrame)
+      packageChangeLog: DataFrame) {
+
+    /** Unpersists the three frames `runAdvisoryPipeline` caches
+      * (advisories, unfurled, version ranks). The marts and the
+      * `graft_*` views stay readable; later reads recompute. */
+    def release(): Unit =
+      Seq(advisories, unfurled, versionRanks).foreach(_.unpersist())
+  }
 
   /** Session with extensions + registered functions. */
   def newSession(appName: String = "graft", cpus: String = "32"): SparkSession = {

@@ -1,6 +1,7 @@
 package graft.serve
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Serving-layer queries: the reference's API querysets as parameterized
@@ -51,6 +52,17 @@ object Serving {
       .drop("_hit")
   }
 
+  /** The ONE mode→edge mapping both purl-lookup entry points share; an
+    * unknown mode is a caller error and must fail as one (a bare
+    * MatchError from an API parameter names nothing). */
+  private def unfurlEdge(mode: String): Column = mode match {
+    case "affecting" => col("is_affected")
+    case "fixed"     => col("is_fixed")
+    case "both"      => col("is_affected") || col("is_fixed")
+    case other => throw new IllegalArgumentException(
+      s"unknown mode '$other' (expected: affecting, fixed, both)")
+  }
+
   /** The latest-affecting / latest-fixed-by queryset family
     * (models.py:2946-3067) as one parameterized form. `purls` is the
     * bounded request list (base_purl, version); `mode` selects which
@@ -63,17 +75,6 @@ object Serving {
     * Scale shape: corpus streams against the broadcast request, the
     * matched avid set (request-bounded) semi-joins advisories.
     */
-  /** The ONE mode→edge mapping both purl-lookup entry points share; an
-    * unknown mode is a caller error and must fail as one (a bare
-    * MatchError from an API parameter names nothing). */
-  private def unfurlEdge(mode: String): Column = mode match {
-    case "affecting" => col("is_affected")
-    case "fixed"     => col("is_fixed")
-    case "both"      => col("is_affected") || col("is_fixed")
-    case other => throw new IllegalArgumentException(
-      s"unknown mode '$other' (expected: affecting, fixed, both)")
-  }
-
   def advisoriesForPurls(advisories: DataFrame, unfurled: DataFrame,
       purls: DataFrame, mode: String = "affecting"): DataFrame = {
     val edge = unfurlEdge(mode)
@@ -156,23 +157,38 @@ object Serving {
           .as("patched_package_count"))
 
   /** Package detail (views.py:160-198): affecting advisories + nearest
-    * fixes + next non-vulnerable version, nested per package. */
+    * fixes + next non-vulnerable version, nested per package.
+    *
+    * Scale shape: one hash exchange on base_purl. The ranked rows, the
+    * affected edges and the nearest-fix rows travel it together, tagged
+    * by kind. One window per (base_purl, version) gives the vulnerable
+    * flag and the version's fixes, a running window per base_purl the
+    * next safe version, and the final groupBy reuses the same
+    * partitioning. A base_purl filter on the result reaches all three
+    * scans. */
   def packageDetail(unfurled: DataFrame, ranked: DataFrame,
       nearestFix: DataFrame): DataFrame = {
-    val affected = unfurled.filter(col("is_affected"))
-      .join(nearestFix,
-        Seq("avid", "base_purl"), "left")
-      .filter(col("version") === col("affected_version"))
-      .groupBy("base_purl", "version")
-      .agg(collect_list(struct(col("avid"),
-        col("nearest_fixed_version"))).as("affecting"))
+    // the fix travels as a struct that is never NULL: a NULL
+    // nearest_fixed_version is still a row of the join
+    val fixes = nearestFix.select(col("base_purl"),
+      col("affected_version").as("version"),
+      struct(col("avid"), col("nearest_fixed_version")).as("_fix"),
+      lit(FixRow).as("_kind"))
+    // each affected edge joins its version's fixes on avid
+    val edgeFixes = when(col("_kind") === EdgeRow,
+      transform(filter(col("_fixes"), f => f.getField("avid") === col("avid")),
+        f => struct(col("avid"), f.getField("nearest_fixed_version")
+          .as("nearest_fixed_version"))))
     // next non-vulnerable: the ONE W3 implementation — re-deriving the
-    // safe-version join here had already drifted once (it lacked
+    // safe-version logic here had already drifted once (it lacked
     // latest_non_vulnerable); any fix to the semantics must land in
-    // nonVulnerableVersions alone
-    val withNext = nonVulnerableVersions(unfurled, ranked)
-      .select("base_purl", "version", "next_non_vulnerable")
-    affected.join(withNext, Seq("base_purl", "version"), "left")
+    // safeNeighbours alone
+    safeNeighbours(unfurled, ranked, Seq(fixes),
+        Map("_fixes" -> collect_list(col("_fix"))))
+      .groupBy("base_purl", "version")
+      .agg(flatten(collect_list(edgeFixes)).as("affecting"),
+        min_by(col("_next"), col("version_rank")).as("next_non_vulnerable"))
+      .filter(size(col("affecting")) > 0)
   }
 
   /** Nested API response for the affecting advisories of one purl version
@@ -216,21 +232,57 @@ object Serving {
   }
 
   /** Next non-vulnerable version per package version (W3): lowest-ranked
-    * safe version above each version's rank within the purl group. */
-  def nonVulnerableVersions(unfurled: DataFrame, ranked: DataFrame): DataFrame = {
-    val vulnerable = unfurled.filter(col("is_affected"))
-      .select(col("base_purl"), col("version")).distinct()
-    val safe = ranked.join(vulnerable, Seq("base_purl", "version"), "left_anti")
-      .select(col("base_purl").as("s_purl"), col("version").as("safe_version"),
-        col("version_rank").as("safe_rank"))
-    ranked.join(safe,
-      col("base_purl") === col("s_purl") &&
-        col("safe_rank") > col("version_rank"), "left")
-      .groupBy(col("base_purl"), col("version"))
-      .agg(min_by(col("safe_version"), col("safe_rank"))
+    * safe version above each version's rank within the purl group, and
+    * the highest-ranked one (`latest_non_vulnerable`). One row per
+    * distinct (base_purl, version) of `ranked`; a version ranked twice
+    * answers for its lower rank. */
+  def nonVulnerableVersions(unfurled: DataFrame, ranked: DataFrame): DataFrame =
+    safeNeighbours(unfurled, ranked)
+      .filter(col("_kind") === RankRow)
+      .groupBy("base_purl", "version")
+      .agg(min_by(col("_next"), col("version_rank"))
         .as("next_non_vulnerable"),
-        max_by(col("safe_version"), col("safe_rank"))
+        min_by(col("_latest"), col("version_rank"))
           .as("latest_non_vulnerable"))
+
+  private val RankRow = 0
+  private val EdgeRow = 1
+  private val FixRow = 2
+
+  /** W3 on one exchange: the ranked rows (`_kind` RankRow), the affected
+    * edges (EdgeRow, with their avid) and the caller's `tagged` rows are
+    * hash-partitioned on base_purl once. One window per (base_purl,
+    * version) gives every row its version's `_vulnerable` flag (an
+    * affected edge exists) and the caller's `perVersion` aggregates. A
+    * second gives each ranked row `_next` / `_latest`: the lowest- and
+    * highest-ranked safe (ranked, not vulnerable) version ranked strictly
+    * above it, or null. That window runs in descending rank order with
+    * frame (unbounded preceding, -1), which holds exactly the higher
+    * ranks, ranks being integers; it grows by one row per step, so the
+    * work is linear in a package's versions, not quadratic like a
+    * rank-greater self-join. Ghosts rank 0, below every real version,
+    * so they never answer as safe. */
+  private def safeNeighbours(unfurled: DataFrame, ranked: DataFrame,
+      tagged: Seq[DataFrame] = Nil,
+      perVersion: Map[String, Column] = Map.empty): DataFrame = {
+    val rows = (ranked.select(col("base_purl"), col("version"),
+        col("version_rank"), lit(RankRow).as("_kind")) +:
+      unfurled.filter(col("is_affected")).select(col("base_purl"),
+        col("version"), col("avid"), lit(EdgeRow).as("_kind")) +:
+      tagged).reduce(_.unionByName(_, allowMissingColumns = true))
+    val sameVersion = Window.partitionBy("base_purl", "version")
+    val above = Window.partitionBy("base_purl")
+      .orderBy(col("version_rank").desc)
+      .rangeBetween(Window.unboundedPreceding, -1)
+    val safe = when(col("_kind") === RankRow && !col("_vulnerable"),
+      struct(col("version_rank"), col("version")))
+    rows.repartition(col("base_purl"))
+      .withColumns((perVersion +
+          ("_vulnerable" -> max(col("_kind") === EdgeRow)))
+        .map { case (n, agg) => n -> agg.over(sameVersion) })
+      .withColumns(Map(
+        "_next" -> min(safe).over(above).getField("version"),
+        "_latest" -> max(safe).over(above).getField("version")))
   }
 
   /** version_rank per package version (models.py:953-973
@@ -514,26 +566,6 @@ object Serving {
       .agg(array_sort(collect_set(struct(col("commit_hash"),
         col("vcs_url")))).as("patches"))
 
-  /** The v3 bulk-packages endpoint composed END-TO-END as one mart
-    * (api_v3.py:253-339 create + :566-700 get_affected_advisories_bulk +
-    * :891-959 get_fixing_advisories_bulk): filter_purls →
-    * is_vulnerable Exists → per-advisory fixed-by ArrayAgg →
-    * AdvisorySet max-severity primary → one canonical nested-JSON
-    * response row per requested purl.
-    *
-    * Scale contract: the REQUEST list is the broadcast side everywhere
-    * (an API page — thousands at most); the unfurled link corpus streams
-    * through semi/equi joins keyed on it, and the only full-corpus
-    * aggregations (fixed-by per advisory, never-affected versions per
-    * package) are map-side-combining groupBys that existed as their own
-    * marts (s14/s15) before composition.
-    *
-    * The JSON is assembled with deterministic string building (sorted
-    * arrays, explicit null spelling) so the DuckDB oracle reproduces it
-    * byte-for-byte — the canonical-JSON discipline of the export sinks.
-    *
-    * @param severities (avid, severity INT) — the advisory severity dim
-    */
   /** severity_range_score (api.py:259-281 via utils.py:512-545
     * get_severity_range): the "min - max" string over a vulnerability's
     * severity VALUES — textual buckets expand to their [lo, hi] pair,
@@ -636,6 +668,26 @@ object Serving {
       .orderBy("purl")
   }
 
+  /** The v3 bulk-packages endpoint composed END-TO-END as one mart
+    * (api_v3.py:253-339 create + :566-700 get_affected_advisories_bulk +
+    * :891-959 get_fixing_advisories_bulk): filter_purls →
+    * is_vulnerable Exists → per-advisory fixed-by ArrayAgg →
+    * AdvisorySet max-severity primary → one canonical nested-JSON
+    * response row per requested purl.
+    *
+    * Scale contract: the REQUEST list is the broadcast side everywhere
+    * (an API page — thousands at most); the unfurled link corpus streams
+    * through semi/equi joins keyed on it, and the only full-corpus
+    * aggregations (fixed-by per advisory, never-affected versions per
+    * package) are map-side-combining groupBys that existed as their own
+    * marts (s14/s15) before composition.
+    *
+    * The JSON is assembled with deterministic string building (sorted
+    * arrays, explicit null spelling) so the DuckDB oracle reproduces it
+    * byte-for-byte — the canonical-JSON discipline of the export sinks.
+    *
+    * @param severities (avid, severity INT) — the advisory severity dim
+    */
   def v3BulkPackages(unfurled: DataFrame, severities: DataFrame,
       request: DataFrame): DataFrame = {
     val req = request.select(col("base_purl"), col("version"),

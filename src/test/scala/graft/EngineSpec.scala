@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.{col, length}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.AdvisoryJsonIngest
@@ -63,6 +64,33 @@ class EngineSpec extends AnyFunSuite with SparkTestSession {
     assert(sp.sql(
       "SELECT * FROM graft_v1_package_vuln_counts WHERE vulnerability_count > 0")
       .collect().nonEmpty)
+  }
+
+  test("Marts.release unpersists the pipeline's caches") {
+    val sp = spark
+    import sp.implicits._
+    graft.functions.GraftFunctions.register(sp)
+    val sc = sp.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val raw = AdvisoryJsonIngest.readTree(sp,
+      "src/test/resources/fixtures/advisories/pypa", "pypa").toDF()
+    val versionsDim = Seq(("pkg:pypi/foo", "1.0.0"),
+      ("pkg:pypi/foo", "1.20.1")).toDF("base_purl", "version")
+    val marts = Engine.runAdvisoryPipeline(sp, raw, versionsDim)
+    Seq(marts.advisories, marts.unfurled, marts.versionRanks)
+      .foreach(_.count())
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty)
+    marts.release()
+    Seq(marts.advisories, marts.unfurled, marts.versionRanks).foreach(df =>
+      assert(df.storageLevel == StorageLevel.NONE))
+    // the vulnerability membership's localCheckpoint is the only copy of
+    // that mart's rows, not a cache: it stays while the marts are readable
+    val left = sc.getPersistentRDDs -- before
+    assert(left.values.forall(_.isCheckpointed),
+      s"still persistent: ${left.values.mkString(", ")}")
+    // the views read through the released caches, so they recompute
+    assert(sp.sql("SELECT count(*) FROM graft_unfurled")
+      .collect().head.getLong(0) == marts.unfurled.count())
   }
 
   test("runCorpusPipeline registers queryable corpus marts") {
